@@ -1,13 +1,17 @@
-"""Build BENCH/engine.zip for spark-submit --py-files."""
+"""Build the engine zip for spark-submit --py-files.
+
+    python BENCH/make_zip.py <out.zip>   # default: BENCH/engine.zip
+"""
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
-    out = os.path.join(REPO, "BENCH", "engine.zip")
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "BENCH", "engine.zip")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         pkg = os.path.join(REPO, "magneto_matcher_spark")
         for root, _dirs, files in os.walk(pkg):

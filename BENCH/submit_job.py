@@ -2,8 +2,8 @@
 rule.  Ships the engine as a zip via --py-files; everything importable from
 the zip only (no repo path assumptions on executors).
 
-    python BENCH/make_zip.py   # builds BENCH/engine.zip
-    spark-submit --master local[8] --py-files BENCH/engine.zip \
+    python BENCH/make_zip.py /tmp/engine.zip   # build artifact, not tracked
+    spark-submit --master local[8] --py-files /tmp/engine.zip \
         BENCH/submit_job.py <n_events> <n_batches> <work_dir>
 
 Prints the per-batch metrics and final throughput JSON line.

@@ -47,6 +47,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # list every path list on the driver: the lake scans exact manifest
+        # file lists, which a distributed listing job (the default past 32
+        # paths) only delays
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

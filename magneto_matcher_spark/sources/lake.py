@@ -23,7 +23,13 @@ catalog plugs in unchanged:
   consumed offset ranges + per-partition lineage (exactly-once, SURVEY §2.13).
 - **time travel** — ``read(snapshot_id=...)`` reads any historical snapshot's
   manifest under its own schema mapping.
-- **maintenance** — ``compact()`` folds MoR deltas (tombstone-retaining);
+- **scan planning from metadata** — like an Iceberg reader, a read never
+  infers a schema or lists a directory: each file group is scanned with its
+  manifest entry's field-ID schema (every write casts to the current schema,
+  so files match it by construction) over the manifest's exact file list,
+  so building a read's DataFrame runs no Spark job.
+- **maintenance** — ``compact()`` folds MoR deltas (tombstone-retaining) in
+  one write job that routes live and delete winners by ``op``;
   ``expire_snapshots(keep_last=N)`` bounds the snapshot log and deletes
   orphaned data files/manifest segments (Iceberg ``expire_snapshots``
   analog), preserving the exactly-once watermark via
@@ -383,9 +389,12 @@ class LakeTable:
         deltas = [e for e in manifest if e.get("kind", "data") == "delta"]
         tombs = [e for e in manifest if e.get("kind", "data") == "tombstone"]
 
-        empty = self.spark.createDataFrame([], self._schema_for(read_schema_id))
         if not deltas and not (keep_tombstones and tombs):
-            base = self._read_manifest(data, read_schema_id) if data else empty
+            base = (
+                self._read_manifest(data, read_schema_id)
+                if data
+                else self.spark.createDataFrame([], self._schema_for(read_schema_id))
+            )
             if keep_tombstones:
                 base = base.withColumn("op", F.lit("U"))
             return base
@@ -399,15 +408,15 @@ class LakeTable:
         dirty_data = [e for e in data if e["bucket"] in dirty_buckets]
         dirty_tombs = [e for e in tombs if e["bucket"] in dirty_buckets]
 
-        dirty_base = (
-            self._read_manifest(dirty_data, read_schema_id) if dirty_data else empty
+        # every dirty bucket holds a delta or (keep_tombstones) a tombstone,
+        # so the overlay is never empty
+        union = self._read_manifest(
+            deltas + dirty_tombs, read_schema_id, extra_cols=("op",)
         )
-        union = dirty_base.withColumn("op", F.lit("U"))
-        overlay = deltas + dirty_tombs
-        if overlay:
-            union = union.unionByName(
-                self._read_manifest(overlay, read_schema_id, extra_cols=("op",))
-            )
+        if dirty_data:
+            union = self._read_manifest(dirty_data, read_schema_id).withColumn(
+                "op", F.lit("U")
+            ).unionByName(union)
         # n_partitions: compact() pins the resolution's exchange to
         # n_buckets on keyhash tables so its rewrites skip their own
         # repartition; plain reads leave it None (dedup parallelism should
@@ -440,7 +449,15 @@ class LakeTable:
         read_schema_id: int,
         extra_cols: tuple[str, ...] = (),
     ) -> DataFrame:
-        """``extra_cols``: system columns present in the files verbatim
+        """Scan ``manifest``'s files mapped onto ``read_schema_id`` by field ID.
+
+        Planned from metadata alone, as an Iceberg reader does: each
+        schema-uniform file group is read with its own entry's
+        ``schema_id`` schema, which is exactly the files' physical schema
+        (every write conforms to the current schema, see :meth:`_bucketed`)
+        — so building the frame runs no schema-inference job, and the exact
+        file list needs no listing job (``session.get_spark``).
+        ``extra_cols``: string system columns present in the files verbatim
         (outside the field-ID schema), e.g. delta files' ``op``."""
         target_fields = self._schema_by_id(read_schema_id)["fields"]
         by_schema: dict[int, list[str]] = {}
@@ -452,7 +469,11 @@ class LakeTable:
         for schema_id, paths in by_schema.items():
             file_fields = self._schema_by_id(schema_id)["fields"]
             by_field_id = {f["id"]: f["name"] for f in file_fields}
-            df = self.spark.read.parquet(*paths)
+            file_schema = T.StructType(
+                self._schema_for(schema_id).fields
+                + [T.StructField(c, T.StringType(), True) for c in extra_cols]
+            )
+            df = self.spark.read.schema(file_schema).parquet(*paths)
             cols = []
             for tf in target_fields:
                 src_name = by_field_id.get(tf["id"])
@@ -505,18 +526,18 @@ class LakeTable:
         split_tombstones_on: str | None = None,
         pre_partitioned: bool = False,
     ) -> list[dict]:
-        """Write ``df`` (current schema + ``_bucket``) partitioned by bucket
+        """Write ``df`` (:meth:`_bucketed`'s layout) partitioned by bucket
         under ``data/{dirname}/``; return manifest entries.  ``kind='delta'``
         marks merge-on-read change files (payload + ``op``).
 
         ``split_tombstones_on='op'``: ONE write job routes delete winners
         (op='D') into ``kind='tombstone'`` files and everything else into
-        ``kind`` files via an extra partition dir — the CoW merge uses this
-        so tombstone retention costs zero extra Spark jobs.  The price is
-        that data files carry the (constant-'U', dictionary-encoded) op
-        column readers never select — accepted deliberately: splitting into
-        two writes to drop one ~zero-entropy column would double the job
-        count on the hottest path.
+        ``kind`` files via an extra partition dir — the CoW merge and
+        :meth:`compact` use this so tombstone retention costs zero extra
+        Spark jobs.  The price is that data files carry the (non-'D',
+        dictionary-encoded) op column readers never select — accepted
+        deliberately: splitting into two writes to drop one ~zero-entropy
+        column would double the job count on the hottest path.
 
         Parallelism: repartitioning on ``_bucket`` alone caps the write at
         ≤ n_buckets non-empty tasks (fewer after hash collisions) no matter
@@ -597,7 +618,19 @@ class LakeTable:
         }
         return entries
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
+    def _bucketed(self, df: DataFrame, *extra_cols: str) -> DataFrame:
+        """``df``'s current-schema columns cast to their table types, then
+        ``extra_cols`` and the ``_bucket`` partition column: the layout
+        :meth:`_write_data_files` takes.  The cast makes every written
+        file's physical types equal its manifest entry's ``schema_id``
+        schema, which the explicit-schema scans of :meth:`_read_manifest`
+        rely on; it comes before the bucket so a frame with a wider or
+        narrower key type still lands in its key's bucket.  Casts to the
+        type a column already has are no-ops the optimizer removes."""
+        df = df.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in self.schema.fields],
+            *extra_cols,
+        )
         spec = self.meta["partition_spec"]
         if spec.get("transform") == "keyhash":
             return df.withColumn(
@@ -671,8 +704,7 @@ class LakeTable:
     def append(self, df: DataFrame, summary: dict | None = None) -> int:
         """Append rows (no key dedup). df must carry the current columns."""
         snapshot_id = self._next_snapshot_id()
-        aligned = df.select(*self.column_names)
-        new_entries = self._write_data_files(self._with_bucket(aligned), f"snap-{snapshot_id}")
+        new_entries = self._write_data_files(self._bucketed(df), f"snap-{snapshot_id}")
         cur = self.current_snapshot()
         s = {"rows-appended": sum(e["rows"] for e in new_entries)}
         s.update(summary or {})
@@ -742,7 +774,6 @@ class LakeTable:
         from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
         snapshot_id = self._next_snapshot_id()
-        cols = self.column_names
         lsn_col = self.lsn_col
 
         is_mor = self.meta.get("write_mode", "cow") == "mor"
@@ -765,7 +796,7 @@ class LakeTable:
             )
             delta_aligned = is_mor and n_aligned is not None
 
-        batch = self._with_bucket(winners.select(*cols, op_col))
+        batch = self._bucketed(winners, op_col)
 
         if is_mor:
             new_entries = self._write_data_files(
@@ -806,7 +837,7 @@ class LakeTable:
                 batch.drop("_bucket"), touched, op_col=op_col
             )
             new_entries = self._write_data_files(
-                self._with_bucket(merged.select(*cols, op_col)),
+                self._bucketed(merged, op_col),
                 f"snap-{snapshot_id}",
                 split_tombstones_on=op_col,
                 # keyhash: merged_frame pinned its one fused-agg exchange to
@@ -928,7 +959,7 @@ class LakeTable:
         staging (the engine serializes on drift)."""
         if self.meta.get("write_mode", "cow") != "mor":
             raise ValueError("stage_delta requires write_mode='mor'")
-        batch = self._with_bucket(winners.select(*self.column_names, op_col))
+        batch = self._bucketed(winners, op_col)
         return self._write_data_files(
             batch, f"delta-stage-{uuid.uuid4().hex[:12]}", kind="delta",
             pre_partitioned=aligned and self.aligned_partitions() is not None,
@@ -964,9 +995,10 @@ class LakeTable:
         tombstone_retention_lsn: int | None = None,
     ) -> int:
         """Fold delta files into data files (MoR maintenance).  Resolves the
-        current state once and rewrites it; subsequent reads are plain scans
-        again.  At scale this is the Iceberg ``rewrite_data_files`` analog —
-        run when delta rows exceed a fraction of base rows.
+        dirty buckets' state and rewrites it in ONE write job; subsequent
+        reads are plain scans again.  At scale this is the Iceberg
+        ``rewrite_data_files`` analog — run when delta rows exceed a
+        fraction of base rows.
 
         Delete winners are NOT discarded: they are rewritten as
         ``kind='tombstone'`` entries (Iceberg's equality-delete retention
@@ -974,11 +1006,18 @@ class LakeTable:
         older 'U' for a deleted key — still loses the LSN comparison instead
         of resurrecting the key (the engine's exactly-once contract).
         Tombstones are ignored by plain reads of delta-free buckets, so they
-        cost nothing until a new delta lands in their bucket.
+        cost nothing until a new delta lands in their bucket.  The one job
+        routes live winners to data files and delete winners to tombstone
+        files under one ``data/snap-{id}/`` directory
+        (``_write_data_files(split_tombstones_on='op')``, as the CoW merge
+        writes), so compacted data files carry the winners' ``op`` column
+        too; readers never select it from data files.
 
         ``tombstone_retention_lsn``: GC horizon — tombstones with
         ``lsn <= horizon`` are dropped (safe once the caller knows no
-        redelivery can reach below that LSN, e.g. the source's acked offset)."""
+        redelivery can reach below that LSN, e.g. the source's acked offset).
+        It filters the winners before the write: ``op != 'D' OR lsn >
+        horizon``."""
         snapshot_id = self._next_snapshot_id()
         cur = self.current_snapshot()
         manifest = self.manifest(cur)
@@ -1009,41 +1048,34 @@ class LakeTable:
         kept = [e for e in manifest if e["bucket"] not in dirty]
         sub = [e for e in manifest if e["bucket"] in dirty]
 
-        # keyhash: pin the resolution's dedup exchange to n_buckets so both
-        # rewrites below reuse it as the bucket layout (zero repartitions)
+        # keyhash: pin the resolution's dedup exchange to n_buckets so the
+        # rewrite reuses it as the bucket layout (zero repartitions)
         n_aligned = self.aligned_partitions()
         winners = self._resolve(
             sub, self.meta["current_schema_id"], keep_tombstones=True,
             n_partitions=n_aligned,
-        ).persist()
-        try:
-            live = winners.filter(F.col("op") != F.lit("D")).select(*self.column_names)
-            new_entries = self._write_data_files(
-                self._with_bucket(live), f"snap-{snapshot_id}",
-                pre_partitioned=n_aligned is not None,
+        )
+        if tombstone_retention_lsn is not None:
+            winners = winners.filter(
+                (F.col("op") != F.lit("D"))
+                | (F.col(self.lsn_col) > tombstone_retention_lsn)
             )
-            tombs = winners.filter(F.col("op") == F.lit("D"))
-            if tombstone_retention_lsn is not None:
-                tombs = tombs.filter(F.col(self.lsn_col) > tombstone_retention_lsn)
-            tomb_entries = self._write_data_files(
-                self._with_bucket(tombs.select(*self.column_names, "op")),
-                f"tomb-{snapshot_id}",
-                kind="tombstone",
-                pre_partitioned=n_aligned is not None,
-            )
-        finally:
-            winners.unpersist()
+        new_entries = self._write_data_files(
+            self._bucketed(winners, "op"), f"snap-{snapshot_id}",
+            split_tombstones_on="op",
+            pre_partitioned=n_aligned is not None,
+        )
+        data_rows = sum(e["rows"] for e in new_entries if e["kind"] == "data")
+        tomb_rows = sum(e["rows"] for e in new_entries if e["kind"] == "tombstone")
         s = {
-            "rows-written": sum(e["rows"] for e in new_entries),
+            "rows-written": data_rows,
             "deltas-folded": len([e for e in sub if e.get("kind", "data") == "delta"]),
             "buckets-compacted": len(dirty),
             "files-kept": len(kept),
-            "tombstones-retained": sum(e["rows"] for e in tomb_entries),
+            "tombstones-retained": tomb_rows,
         }
         s.update(summary or {})
-        return self._commit(
-            "compact", s, new_entries=kept + new_entries + tomb_entries
-        )
+        return self._commit("compact", s, new_entries=kept + new_entries)
 
     # ---------------- maintenance: snapshot expiry + orphan GC ----------------
 

@@ -27,6 +27,7 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from magneto_matcher_spark.plans.apply import dedup_max_lsn, normalize_payload
 from magneto_matcher_spark.sources.lake import SAFE_PROMOTIONS, LakeTable
@@ -508,6 +509,10 @@ class CdcEngine:
         spark = self.table.spark
         lsn_col = self.table.lsn_col
         watermark = self.table.committed_offset_end()
+        staging_schema = T.StructType(
+            self.table.schema.fields
+            + [T.StructField(c, T.StringType(), True) for c in sorted(_SYSTEM_COLS)]
+        )
 
         def stage(path: str):
             t0 = time.time()
@@ -525,7 +530,11 @@ class CdcEngine:
                 )
             if n == 0 or hi <= watermark:
                 return (path, n, lo, hi, spans, None, time.time() - t0)
-            batch = normalize_payload(spark.read.parquet(path))
+            # _can_replay_concurrently checked every footer against this
+            # schema: read with it, no inference job
+            batch = normalize_payload(
+                spark.read.schema(staging_schema).parquet(path)
+            )
             strategy, _ = self._resolve_dedup_strategy(batch, n)
             n_aligned = self.table.aligned_partitions()
             winners = dedup_max_lsn(

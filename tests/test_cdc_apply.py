@@ -168,3 +168,24 @@ def test_final_state_view_ordering(spark, small_feed):
     out = final_state_view(state).collect()
     keys = [(r["conv_id"], r["turn_idx"]) for r in out]
     assert keys == sorted(keys)
+
+
+def test_events_feed_op_is_coupled_to_lsn(spark, tmp_path):
+    """The registry's binlog view derives op from the LSN (op='D' exactly
+    when lsn % 10 == 0); cdc_replay_final_state filters deletes on the LSN
+    alone, so a change to the op rule must fail here rather than silently
+    diverge that query from its oracle."""
+    from magneto_matcher_spark.queries import _events_feed
+
+    events = spark.range(0, 150).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 7).cast("int").alias("user_id"),
+        F.lit("click").alias("event_type"),
+        (F.col("id") / 3).alias("value"),
+    )
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    rows = _events_feed(spark, str(tmp_path)).select("lsn", "op").collect()
+    assert len(rows) == 150
+    assert {r["op"] for r in rows} == {"D", "U"}
+    for r in rows:
+        assert (r["op"] == "D") == (r["lsn"] % 10 == 0), r

@@ -731,3 +731,77 @@ def test_legacy_inline_manifest_parent_upgrades_without_data_loss(spark, tmp_pat
     # and expiry does not GC the upgraded parent's files
     t2.expire_snapshots(keep_last=1)
     assert t2.read().count() == 3
+
+
+def test_append_casts_to_table_types(spark, table):
+    """Every write conforms to the table schema before bucketing, so a frame
+    with a wider key type (``turn_idx`` bigint) and a narrower LSN (int)
+    reads back equal — the explicit-schema scans rely on each file's
+    physical types equalling its manifest entry's schema."""
+    rows = [_ev(i, "I", f"c{i}", i % 3, f"t{i}") for i in range(1, 21)]
+    table.append(
+        spark.createDataFrame(rows, CHANGE_FEED_SCHEMA).drop("op")
+        .withColumn("turn_idx", F.col("turn_idx").cast("bigint"))
+        .withColumn("lsn", F.col("lsn").cast("int"))
+    )
+    back = table.read()
+    assert dict(back.dtypes)["turn_idx"] == "int"
+    assert dict(back.dtypes)["lsn"] == "bigint"
+    want = sorted((r[2], r[3], r[0], r[5]) for r in rows)
+    assert sorted(
+        (r["conv_id"], r["turn_idx"], r["lsn"], r["text"]) for r in back.collect()
+    ) == want
+    # each row sits in the bucket its table-typed key hashes to: a merge
+    # touching one key finds and replaces it
+    table.merge(dedup_max_lsn(spark.createDataFrame(
+        [_ev(100, "U", "c4", 1, "new")], CHANGE_FEED_SCHEMA
+    )))
+    state = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
+    assert len(state) == 20 and state[("c4", 1)] == "new"
+
+
+def _jobs_run_by(spark, group: str, fn):
+    """(fn's result, ids of the Spark jobs fn ran), tagged by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_mor_scan_planning_and_compaction_job_counts(spark, tmp_path):
+    """A resolved read is planned from the manifest alone (no schema
+    inference, no listing job past 32 files), and compaction is one write
+    job over the resolution's shuffle: ≤ 2 jobs, data and tombstone files
+    under one ``snap-{id}`` directory, state unchanged."""
+    import os
+    import uuid
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "jobs"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+        n_buckets=16, write_mode="mor",
+    )
+    for b in range(3):  # 3 staged delta batches × 16 buckets > 32 files
+        batch = spark.createDataFrame(
+            [_ev(1000 * b + i, "D" if b and i % 7 == 0 else "U", f"c{i}", 0,
+                 f"v{b}") for i in range(200)],
+            CHANGE_FEED_SCHEMA,
+        )
+        t.commit_delta(t.stage_delta(dedup_max_lsn(batch)))
+    manifest = t.manifest(t.current_snapshot())
+    assert len(manifest) > 32
+
+    tag = uuid.uuid4().hex
+    resolved, read_jobs = _jobs_run_by(spark, f"read-{tag}", t.read)
+    assert read_jobs == []
+    before = sorted(map(tuple, resolved.collect()))
+
+    sid, compact_jobs = _jobs_run_by(spark, f"compact-{tag}", t.compact)
+    assert len(compact_jobs) <= 2, compact_jobs
+    written = t.manifest(t.current_snapshot())
+    assert {e["kind"] for e in written} == {"data", "tombstone"}
+    assert {e["path"].split(os.sep)[1] for e in written} == {f"snap-{sid}"}
+    assert sorted(map(tuple, t.read().collect())) == before
